@@ -19,8 +19,45 @@ Scale analysis (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Sequence
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .session import compute_partitions
+
+
+def key_join_pairs(
+    keyed: DataFrame,
+    key: str | Sequence[str],
+    id_col: str,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Self-join ``keyed`` on ``key``: one row per (key, id_a, id_b) with
+    id_a < id_b, plus each ``carry`` column as ``<col>_a`` / ``<col>_b``.
+
+    The shape every pair producer shares (blocks, bands, fingerprints,
+    prefixes).  ``keyed`` is materialized ONCE (lazy localCheckpoint) and
+    both join sides read that one materialization: in the broadcast regime
+    the two branches otherwise recompute the keying subtree (a signature
+    UDF, a size window, a union+dedup) independently, because
+    ReuseExchange only dedups identical shuffled-join exchanges.  Pass
+    ``keyed`` already projected to ids + keys — the checkpoint stores every
+    column it has.  Carried columns a caller never reads are pruned from
+    that join side by the optimizer.  Verify predicates, pair dedup and
+    aggregates stay with the caller.
+    """
+    keyed = keyed.localCheckpoint(eager=False)
+    on = [key] if isinstance(key, str) else list(key)
+
+    def side(sfx: str) -> DataFrame:
+        return keyed.select(
+            *on,
+            F.col(id_col).alias(f"id_{sfx}"),
+            *[F.col(c).alias(f"{c}_{sfx}") for c in carry],
+        )
+
+    return side("a").join(side("b"), on).where(F.col("id_a") < F.col("id_b"))
 
 
 def candidate_pairs(
@@ -28,7 +65,6 @@ def candidate_pairs(
     max_block_size: int = 200,
     keep_pass_provenance: bool = True,
     drop_block_size: int | None = None,
-    share_blocks: bool = True,
     extra_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """blocks(doc_id, block_pass, block_key) -> pairs(id_a, id_b[, block_key, block_pass]).
@@ -54,8 +90,6 @@ def candidate_pairs(
     # needs anyway — no aggregate round-trip, and crucially no broadcast:
     # at web scale the size map has ~10^10 distinct keys and can never be
     # broadcast (driver OOM); a window count stays fully distributed
-    from pyspark.sql import Window
-
     w = Window.partitionBy("block_key")
     b = blocks.withColumn("bsize", F.count("*").over(w)).where(F.col("bsize") > 1)
     if drop_block_size is not None:
@@ -69,28 +103,13 @@ def candidate_pairs(
     ).withColumn(
         "join_key", F.concat_ws("#", F.col("block_key"), F.col("salt"))
     )
-    if share_blocks:
-        # one materialization of the keyed/salted table for BOTH self-join
-        # branches: in the broadcast regime the two sides otherwise
-        # recompute the band-key UDF and the size window independently
-        # (ReuseExchange only dedups identical shuffled-join exchanges —
-        # verified via executedPlan ArrowEval/Window counts).  Rows are
-        # ids + key strings only, never text, so the footprint is the same
-        # data the join shuffle would spill anyway.  Set share_blocks=False
-        # on a real cluster to keep full lineage-based fault recovery and
-        # let exchange reuse do the deduplication in the SMJ regime.
-        b = b.localCheckpoint(eager=False)
-    left = b.select(
-        F.col("join_key"),
-        F.col("doc_id").alias("id_a"),
-        F.col("block_key"),
-        F.col("block_pass"),
-    )
-    right = b.select(F.col("join_key"), F.col("doc_id").alias("id_b"))
-    pairs = (
-        left.join(right, "join_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .drop("join_key")
+    pairs = key_join_pairs(
+        b, "join_key", "doc_id", carry=("block_key", "block_pass")
+    ).select(
+        "id_a",
+        "id_b",
+        F.col("block_key_a").alias("block_key"),
+        F.col("block_pass_a").alias("block_pass"),
     )
     if extra_pairs is not None:
         ep = extra_pairs.select(
@@ -101,22 +120,12 @@ def candidate_pairs(
         ).where(F.col("id_a") != F.col("id_b"))
         pairs = pairs.unionByName(ep)
     # Partition the pair table by COMPUTE CAPACITY, not shuffle bytes
-    # (round 7): candidate pairs always feed a per-pair scoring stage
-    # (text join + Arrow kernel crossing) whose cost per byte dwarfs the
-    # shuffle, but AQE sizes the dedup exchange by bytes — an ids-only
-    # pair table coalesces to a handful of partitions and the downstream
-    # scoring stage runs nearly serial (measured: q3 verify ran in 3
-    # AQE-coalesced tasks, 4.2s -> 2.7s with this exchange at 2x cores).
-    # The explicit width is user-specified, so AQE leaves it alone; the
-    # dedup groupBy reuses it partition-locally (still ONE exchange).
-    # Scale-adaptive: derives from the cluster's total cores; override
-    # with LEVSIM_PAIR_PARTITIONS where pair volume demands byte-based
-    # sizing instead.
-    import os
-
-    n_part = int(os.environ.get("LEVSIM_PAIR_PARTITIONS", "0")) or (
-        pairs.sparkSession.sparkContext.defaultParallelism * 2
-    )
+    # (session.compute_partitions): candidate pairs always feed a per-pair
+    # scoring stage (text join + Arrow kernel crossing) whose cost per
+    # byte dwarfs the shuffle (measured: q3 verify ran in 3 AQE-coalesced
+    # tasks, 4.2s -> 2.7s with this exchange at 2x cores).  The dedup
+    # groupBy reuses it partition-locally (still ONE exchange).
+    n_part = compute_partitions(pairs.sparkSession, 2)
     pairs = pairs.repartition(n_part, "id_a", "id_b")
     if keep_pass_provenance:
         # keep one provenance row per pair: lexicographically first pass/key

@@ -43,16 +43,19 @@ def connected_components(
     """edges(src, dst) -> (doc_id, cluster_id); singletons absent (callers
     left-join and coalesce to self if needed).  cluster_id = min node id in
     the component (deterministic, content-derived — stable across runs)."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).dropDuplicates(["s", "d"])
-    e = e.localCheckpoint()
-    # both-direction neighbor view, materialized ONCE (round 7): each round
-    # previously ran TWO label joins (s-side and d-side), i.e. two broadcast
-    # builds / two label shuffles per round; joining the pre-unioned (id,
-    # nbr) view needs one.  Ids-only rows (2|E|), eager so the per-round
-    # consumers read cache instead of racing a lazy materialization.
-    nbrs = e.select(F.col("s").alias("id"), F.col("d").alias("nbr")).union(
-        e.select(F.col("d").alias("id"), F.col("s").alias("nbr"))
-    ).localCheckpoint()
+    # both-direction neighbor view, deduped and materialized ONCE, so each
+    # round needs one label join.  Ids-only rows (2|E|) from ONE scan of
+    # ``edges``; eager so the per-round consumers read cache instead of
+    # racing a lazy materialization.
+    nbrs = (
+        edges.select(F.explode(F.array(
+            F.struct(F.col(src).alias("id"), F.col(dst).alias("nbr")),
+            F.struct(F.col(dst).alias("id"), F.col(src).alias("nbr")),
+        )).alias("_e"))
+        .select("_e.id", "_e.nbr")
+        .dropDuplicates(["id", "nbr"])
+        .localCheckpoint()
+    )
     nodes = nbrs.select("id").distinct()
     labels = nodes.withColumn("comp", F.col("id"))
     labels = labels.repartition("id").localCheckpoint()

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from . import kernels
+from .session import compute_partitions
 
 CONSENSUS_SCHEMA = StructType(
     [
@@ -153,22 +154,16 @@ def elect_representatives(
         F.lit(1).cast("long").alias("n_members"),
         F.col(text_col).alias("representative"),
     )
-    # Width the consensus exchange by COMPUTE capacity (round 7): the
-    # localCheckpoint above erases the window's partitioning info
-    # (LogicalRDD reports UnknownPartitioning), so applyInPandas inserts
-    # a fresh exchange that AQE then sizes by BYTES — at 20k docs / 5k
-    # multi-member clusters the election stage ran in ~5 tasks, 12.5s
-    # nearly serial, while per-cluster kernel cost (not bytes) is the
-    # real load.  An explicit repartition on cluster_id at the cluster's
-    # total cores feeds applyInPandas directly (one exchange, exempt
-    # from AQE coalescing): 17s -> ~2.7s at the 4x holdout corpus,
-    # neutral at sf0.1 (measured both).  Override with
-    # LEVSIM_CONSENSUS_PARTITIONS.
-    import os
-
-    n_part = int(os.environ.get("LEVSIM_CONSENSUS_PARTITIONS", "0")) or (
-        clustered.sparkSession.sparkContext.defaultParallelism
-    )
+    # Width the consensus exchange by COMPUTE capacity
+    # (session.compute_partitions): the localCheckpoint above erases the
+    # window's partitioning info (LogicalRDD reports UnknownPartitioning),
+    # so applyInPandas inserts a fresh exchange that AQE then sizes by
+    # BYTES — at 20k docs / 5k multi-member clusters the election stage
+    # ran in ~5 tasks, 12.5s nearly serial, while per-cluster kernel cost
+    # (not bytes) is the real load.  An explicit repartition on cluster_id
+    # at the cluster's total cores feeds applyInPandas directly (one
+    # exchange): 17s -> ~2.7s at the 4x holdout corpus, neutral at sf0.1.
+    n_part = compute_partitions(clustered.sparkSession, 1)
     multi = (
         df.where(F.col("_n") > 1)
         .drop("_n")

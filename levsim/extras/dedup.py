@@ -26,6 +26,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from .. import blocking
+from ..candidates import candidate_pairs, key_join_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -107,8 +108,6 @@ def minhash_candidate_pairs(
     max_block_size: int = 500,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding (id_a < id_b)."""
-    from ..candidates import candidate_pairs
-
     blocks = blocking.add_block_keys(
         df, id_col=id_col, text_col=text_col, host_col="__none__",
         n_perm=n_perm, rows_per_band=rows_per_band, shingle_k=shingle_k,
@@ -205,6 +204,22 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     mean short keys and big buckets (n^2 within bucket).  Keep max_hamming
     small at scale (Manku et al. WWW'07 use <= 3 over permuted tables)."""
     sig = df.select(F.col(id_col).alias("doc_id"), simhash_udf()(F.col(text_col)).alias("sh"))
+    return _simhash_band_pairs(sig, max_hamming, 64)
+
+
+def _simhash_band_pairs(sig: DataFrame, max_hamming: int, n_bits: int) -> DataFrame:
+    """sig(doc_id, sh) -> (id_a, id_b, hamming_bits): EXACTLY the pairs with
+    hamming <= max_hamming.  ``max_hamming + 1`` disjoint band keys
+    (pigeonhole recall, :func:`simhash_band_bounds`) -> band self-join ->
+    bit_count verify -> pair dedup.
+
+    Verify runs BEFORE the dedup exchange (round 7, "shuffle fewer
+    bytes"): the bit_count test is a per-row JVM expression, so evaluating
+    it on the raw band matches (a pair can match in up to max_hamming+1
+    bands) costs re-evaluated popcounts but drops every non-qualifying
+    pair before the dropDuplicates shuffle.  Identical result set: hamming
+    is a pure function of (sh_a, sh_b), equal across a pair's duplicate
+    band rows."""
     bands = sig.select(
         "doc_id",
         "sh",
@@ -217,31 +232,17 @@ def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                          # LongType, but -1 is all-ones in two's complement.
                          .bitwiseAND(F.lit(-1 if w >= 64 else (1 << w) - 1))
                          .cast("string"))
-                for i, (off, w) in enumerate(simhash_band_bounds(max_hamming))
+                for i, (off, w) in enumerate(simhash_band_bounds(max_hamming, n_bits))
             ])
         ).alias("band_key"),
     )
-    # one signature-UDF materialization for both self-join branches (the
-    # broadcast regime defeats ReuseExchange; same fix as candidate_pairs)
-    bands = bands.localCheckpoint(eager=False)
-    a = bands.select(F.col("band_key"), F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = bands.select(F.col("band_key"), F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # verify BEFORE the dedup exchange (round 7, guide §2.3 "shuffle
-    # fewer bytes"): the bit_count test is a per-row JVM expression, so
-    # evaluating it on the raw band matches (a pair can match in up to
-    # max_hamming+1 bands) costs re-evaluated popcounts but drops every
-    # non-qualifying pair before the dropDuplicates shuffle.  Identical
-    # result set: hamming is a pure function of (sh_a, sh_b), which are
-    # equal across a pair's duplicate band rows.
-    pairs = (
-        a.join(b, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .drop("band_key")
+    return (
+        key_join_pairs(bands, "band_key", "doc_id", carry=("sh",))
         .withColumn("hamming_bits", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .where(F.col("hamming_bits") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b", "hamming_bits")
     )
-    return pairs.select("id_a", "id_b", "hamming_bits")
 
 
 # ---------------------------------------------------------------------------
@@ -302,29 +303,7 @@ def simhash_sql_pairs(df: DataFrame, id_col: str, text_col: str,
     the identical pair set."""
     sig = df.select(F.col(id_col).alias("doc_id"),
                     simhash_sql_col(F.col(text_col), n_bits).alias("sh"))
-    bands = sig.select(
-        "doc_id", "sh",
-        F.explode(F.array(*[
-            F.concat(F.lit(f"{i}:"),
-                     F.shiftright(F.col("sh"), off)
-                     .bitwiseAND(F.lit((1 << w) - 1)).cast("string"))
-            for i, (off, w) in enumerate(simhash_band_bounds(max_hamming, n_bits))
-        ])).alias("band_key"),
-    )
-    a = bands.select("band_key", F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = bands.select("band_key", F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # same verify-before-dedup order as simhash_candidate_pairs (round
-    # 7): hamming is a pure function of the signatures, so filtering the
-    # raw band matches first shuffles only qualifying pairs — identical
-    # result set, and the DuckDB oracle is order-insensitive.
-    return (
-        a.join(b, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming_bits", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .where(F.col("hamming_bits") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "hamming_bits")
-    )
+    return _simhash_band_pairs(sig, max_hamming, n_bits)
 
 
 def word_shingles_col(text_col, k: int = 2) -> F.Column:
@@ -388,11 +367,8 @@ def minhash_sql_pairs(df: DataFrame, id_col: str, text_col: str,
             for bi in range(n_bands)
         ])).alias("band_key"),
     )
-    a = bands.select("band_key", F.col("doc_id").alias("id_a"))
-    b = bands.select("band_key", F.col("doc_id").alias("id_b"))
     return (
-        a.join(b, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
+        key_join_pairs(bands, "band_key", "doc_id")
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -535,12 +511,8 @@ def winnow_dup_pairs(
     if max_fp_docs > 0:
         dfq = fps.groupBy("fp").agg(F.count("*").alias("_n"))
         fps = fps.join(dfq.where(F.col("_n") <= max_fp_docs), "fp").drop("_n")
-    fps = fps.localCheckpoint(eager=False)  # both self-join branches
-    a = fps.select(F.col("fp"), F.col("id").alias("id_a"))
-    b = fps.select(F.col("fp"), F.col("id").alias("id_b"))
     return (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
+        key_join_pairs(fps, "fp", "id")
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("shared_fps"))
         .where(F.col("shared_fps") >= min_shared)
@@ -908,16 +880,6 @@ def prefix_filtered_jaccard_pairs(
             ).alias("pos", "s"),
         )
         .select("doc_id", "n", "pos", F.col("s.tok").alias("tok"))
-        # both self-join branches read this — materialize once
-        .localCheckpoint(eager=False)
-    )
-    a = pref.select(
-        F.col("doc_id").alias("id_a"), F.col("n").alias("na"),
-        F.col("pos").alias("pos_a"), "tok",
-    )
-    b = pref.select(
-        F.col("doc_id").alias("id_b"), F.col("n").alias("nb"),
-        F.col("pos").alias("pos_b"), "tok",
     )
     # PPJoin positional filter: a qualifying pair needs overlap
     # alpha = ceil(t/(1+t) * (na+nb)); at the FIRST common shingle (pos_a,
@@ -926,18 +888,17 @@ def prefix_filtered_jaccard_pairs(
     # occurrences below alpha is lossless (the first-common occurrence of a
     # qualifying pair always passes) and prunes the dense-shingle fan-out
     # that a pure prefix join suffers on low-entropy corpora.
-    alpha = F.expr(f"((na + nb) * {tn} + {tn + td} - 1) div {tn + td}")
+    alpha = F.expr(f"((n_a + n_b) * {tn} + {tn + td} - 1) div {tn + td}")
     cand = (
-        a.join(b, "tok")
+        key_join_pairs(pref, "tok", "doc_id", carry=("n", "pos"))
         .where(
-            (F.col("id_a") < F.col("id_b"))
             # size filter: J >= t forces t|A| <= |B| and t|B| <= |A|
-            & (F.col("nb") * td >= F.col("na") * tn)
-            & (F.col("na") * td >= F.col("nb") * tn)
+            (F.col("n_b") * td >= F.col("n_a") * tn)
+            & (F.col("n_a") * td >= F.col("n_b") * tn)
             & (
                 1 + F.least(
-                    F.col("na") - 1 - F.col("pos_a"),
-                    F.col("nb") - 1 - F.col("pos_b"),
+                    F.col("n_a") - 1 - F.col("pos_a"),
+                    F.col("n_b") - 1 - F.col("pos_b"),
                 )
                 >= alpha
             )
@@ -1052,18 +1013,14 @@ def edit_distance_join(
             F.explode(F.slice("arr", 1, q * tau + 1)).alias("s"),
         )
         .select("doc_id", "len", F.col("s.g").alias("g"), F.col("s.occ").alias("occ"))
-        .localCheckpoint(eager=False)
     )
-    pa = pref.select(F.col("doc_id").alias("id_a"), F.col("len").alias("la"), "g", "occ")
-    pb = pref.select(F.col("doc_id").alias("id_b"), F.col("len").alias("lb"), "g", "occ")
     cand_pref = (
-        pa.join(pb, ["g", "occ"])
+        key_join_pairs(pref, ["g", "occ"], "doc_id", carry=("len",))
         .where(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(F.col("la") - F.col("lb")) <= tau)
+            (F.abs(F.col("len_a") - F.col("len_b")) <= tau)
             # prefix theorem needs one side long; short-short pairs are the
             # bucket pass's job (keeping them out avoids double work)
-            & ((F.col("la") > short_len) | (F.col("lb") > short_len))
+            & ((F.col("len_a") > short_len) | (F.col("len_b") > short_len))
         )
         .select("id_a", "id_b")
     )

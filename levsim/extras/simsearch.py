@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from ..candidates import key_join_pairs
+from ..session import compute_partitions
+
 
 def norm_col(v) -> F.Column:
     """L2 norm of an array<float/double> column (JVM higher-order fns)."""
@@ -420,25 +423,16 @@ def embedding_neardup_pairs(
                 for i in range(bands)
             ])).alias("bucket"),
         )
-        # lazy localCheckpoint: both sides of the self-join below share ONE
-        # materialization of the signature UDF (in the broadcast regime the
-        # two join branches otherwise recompute it independently — verified
-        # via executedPlan ArrowEvalPython count).  ids+bucket strings only,
-        # so the materialized footprint is bands x (8B + ~12B) per vector.
-        buckets = buckets.localCheckpoint(eager=False)
-        # width the dedup exchange by compute capacity, not bytes (round
-        # 7, same fix as candidates.candidate_pairs): the ids-only pair
-        # table AQE-coalesces to a couple of partitions, but every pair
-        # downstream pays a dim-wide interpreted cosine — explicit width
-        # keeps the verify stage parallel; the dropDuplicates reuses the
-        # partitioning (still one exchange).
-        n_part = (
-            corpus.sparkSession.sparkContext.defaultParallelism * 2
-        )
+        # key_join_pairs shares ONE materialization of the signature UDF
+        # between both join sides; ids+bucket strings only, so it stores
+        # bands x (8B + ~12B) per vector.  The dedup exchange is sized by
+        # compute capacity, not bytes (session.compute_partitions): the
+        # ids-only pair table AQE-coalesces to a couple of partitions, but
+        # every pair downstream pays a dim-wide interpreted cosine.  The
+        # dropDuplicates reuses the partitioning (still one exchange).
+        n_part = compute_partitions(corpus.sparkSession, 2)
         pair_ids = (
-            buckets.select(F.col("bucket"), F.col("id").alias("id_a"))
-            .join(buckets.select(F.col("bucket"), F.col("id").alias("id_b")), "bucket")
-            .where(F.col("id_a") < F.col("id_b"))
+            key_join_pairs(buckets, "bucket", "id")
             .drop("bucket")
             .repartition(n_part, "id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"])

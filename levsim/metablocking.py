@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .candidates import key_join_pairs
+
 __all__ = [
     "comparison_edges",
     "prune_edges_wep",
@@ -53,7 +55,6 @@ def comparison_edges(
     id_col: str = "doc_id",
     key_col: str = "block_key",
     max_block_size: int | None = None,
-    share_blocks: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cbs, arcs_ppm) for every distinct co-blocked pair.
 
@@ -68,16 +69,12 @@ def comparison_edges(
     the dedup aggregate AND the size window both run exchange-free on
     top of it (HashPartitioning(_bk) satisfies both distributions); the
     old groupBy(sizes)+join round-trip recomputed the distinct twice and
-    added two more exchanges.  ``share_blocks`` then materializes the
-    table once (lazy localCheckpoint) for BOTH self-join branches — the
-    same fix as ``candidates.candidate_pairs``: in the broadcast regime
-    the two sides otherwise recompute union+dedup+window independently
-    (measured 16.4s -> 2.2s on the round-7 q10 bench, identical edges).
-    Set ``share_blocks=False`` on a real cluster to keep lineage-based
-    fault recovery and let ReuseExchange dedup the SMJ-regime plan.
+    added two more exchanges.  ``candidates.key_join_pairs`` then
+    materializes the table once for BOTH self-join branches, which
+    otherwise recompute union+dedup+window independently in the
+    broadcast regime (measured 16.4s -> 2.2s on the round-7 q10 bench,
+    identical edges).
     """
-    from pyspark.sql import Window
-
     b = (
         blocks.select(F.col(key_col).alias("_bk"), F.col(id_col).alias("_id"))
         .repartition("_bk")
@@ -95,17 +92,12 @@ def comparison_edges(
         "_w_ppm",
         F.expr(f"cast({_PPM} as bigint) div (_bsz * (_bsz - 1) div 2)"),
     )
-    if share_blocks:
-        b = b.localCheckpoint(eager=False)
-    lhs = b.select("_bk", F.col("_id").alias("id_a"), "_w_ppm")
-    rhs = b.select("_bk", F.col("_id").alias("id_b"))
     return (
-        lhs.join(rhs, "_bk")
-        .where(F.col("id_a") < F.col("id_b"))
+        key_join_pairs(b, "_bk", "_id", carry=("_w_ppm",))
         .groupBy("id_a", "id_b")
         .agg(
             F.count("*").cast("long").alias("cbs"),
-            F.sum("_w_ppm").cast("long").alias("arcs_ppm"),
+            F.sum("_w_ppm_a").cast("long").alias("arcs_ppm"),
         )
     )
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, candidates, clustering, consensus, normalize, scoring
+from .session import compute_partitions
 from .tables import SnapshotTable, snapshot_id_for
 
 
@@ -222,7 +223,7 @@ class ERPipeline:
             # widen the ids-only pair set BEFORE attaching texts: pair rows
             # are ~20 bytes here vs ~2 texts after the join, and a snapshot
             # read of a small parquet may come back as 1 partition
-            par = self.spark.sparkContext.defaultParallelism * 2
+            par = compute_partitions(self.spark, 2)
             wide_pairs = pairs_df.repartition(par, "id_a")
             with_text = scoring.attach_texts(wide_pairs, norm_df, id_col=cfg.id_col,
                                              text_col="norm_text")

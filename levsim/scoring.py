@@ -108,10 +108,6 @@ def score_pairs(
     return df
 
 
-def matched_pairs(scored: DataFrame, tau: float, score_col: str = "ratio") -> DataFrame:
-    return scored.where(F.col(score_col) >= F.lit(tau))
-
-
 def score_pairs_cascade(
     pairs_with_text: DataFrame,
     tau: float,

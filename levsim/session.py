@@ -38,6 +38,22 @@ def iceberg_jar_path() -> str | None:
 ICEBERG_CATALOG = "levsim_ice"
 
 
+def compute_partitions(spark: SparkSession, per_core: int) -> int:
+    """Exchange width for a stage whose cost is per-row compute, not bytes.
+
+    Ids-only pair tables and per-cluster election inputs are tiny in bytes,
+    so AQE's byte-based sizing coalesces their exchanges to a handful of
+    partitions and the downstream kernel stage runs nearly serial.  An
+    explicit ``repartition(n, ...)`` at ``per_core`` x the cluster's total
+    cores keeps it parallel (AQE leaves a user-specified width alone).
+    ``LEVSIM_COMPUTE_PARTITIONS`` overrides every such width at once, for
+    data volumes where byte-based sizing is the right call after all.
+    """
+    return int(os.environ.get("LEVSIM_COMPUTE_PARTITIONS", "0")) or (
+        spark.sparkContext.defaultParallelism * per_core
+    )
+
+
 def get_spark(
     app_name: str = "levsim",
     master: str | None = None,

@@ -178,19 +178,6 @@ EDITOPS_SCHEMA = ArrayType(
     )
 )
 
-OPCODES_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("op", StringType()),
-            StructField("i1", IntegerType()),
-            StructField("i2", IntegerType()),
-            StructField("j1", IntegerType()),
-            StructField("j2", IntegerType()),
-        ]
-    )
-)
-
-
 def lev_editops_udf():
     """Minimal edit script per pair (diagnostic path, O(mn) memory per pair —
     not for the bulk scoring hot path; see SURVEY.md §2a editops row)."""
@@ -205,23 +192,6 @@ def lev_editops_udf():
             else [{"op": o, "spos": s, "dpos": d} for (o, s, d) in ops]
             for ops in scripts
         ]
-        return pd.Series(out)
-
-    return _once(_udf)
-
-
-def lev_opcodes_udf():
-    @pandas_udf(OPCODES_SCHEMA)
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a.tolist(), b.tolist()):
-            if x is None or y is None:
-                out.append(None)
-            else:
-                out.append(
-                    [{"op": o, "i1": i1, "i2": i2, "j1": j1, "j2": j2}
-                     for (o, i1, i2, j1, j2) in kernels.opcodes(x, y)]
-                )
         return pd.Series(out)
 
     return _once(_udf)

@@ -1,17 +1,29 @@
-"""Dump explain('formatted') for touched queries. Usage:
-   python dump_plans.py <repo_dir> <out_dir> <suffix>
-Writes <out_dir>/<query>_<suffix>.txt for each entry."""
-import os, sys
+"""Dump explain('formatted') plans of the pair-producing and clustering
+queries, for before/after plan diffs of an engine change.
 
-repo, out_dir, suffix = sys.argv[1], sys.argv[2], sys.argv[3]
+Usage:
+   python scripts/dump_plans.py <repo_dir> <out_dir> <suffix> <gate_sf_dir> <bench_sf_dir>
+
+Plans are built from the levsim checkout at <repo_dir> (so one script can
+dump a parent commit and a change alike) on local[$SPARK_GRAFT_CPUS].
+Declared queries read <gate_sf_dir>; the bench-shape queries (mirrors of
+bench.py q2/q3/q6/q7/q10) read <bench_sf_dir>.  Writes
+<out_dir>/<query>_<suffix>.txt for each entry.
+"""
+import os
+import sys
+
+repo, out_dir, suffix, gate_sf_dir, sf_dir = sys.argv[1:6]
 sys.path.insert(0, repo)
 os.makedirs(out_dir, exist_ok=True)
-from pyspark.sql import functions as F
-from levsim.session import get_spark
+from pyspark.sql import functions as F  # noqa: E402
 
-spark = get_spark(app_name="plans", master="local[8]", shuffle_partitions=16)
+from levsim.session import get_spark  # noqa: E402
+
+cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+spark = get_spark(app_name="plans", master=f"local[{cpus}]", shuffle_partitions=16)
 spark.sparkContext.setLogLevel("ERROR")
-sf_dir = "/root/testdata/sf0.1"
+
 
 def explain_str(df):
     jvm = spark._jvm
@@ -23,11 +35,12 @@ import __spark_entry__ as entrymod
 DECLARED = ["meta_block_wnp", "minhash_dedup_pairs", "minhash_dedup_clusters",
             "cosine_neardup_pairs", "sorted_neighborhood",
             "chain_components", "chain_components_star",
-            "simhash_pairs", "simhash_md5_pairs", "canonical_selection"]
+            "simhash_pairs", "simhash_md5_pairs", "canonical_selection",
+            "winnow_dup_pairs", "minhash_md5_pairs", "prefix_jaccard_join"]
 qs = entrymod.queries()
 for name in DECLARED:
     try:
-        df = qs[name](spark, "/root/testdata/sf0.01")
+        df = qs[name](spark, gate_sf_dir)
         open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w").write(explain_str(df))
         print("ok", name)
     except Exception as ex:

@@ -79,6 +79,37 @@ def test_candidate_multi_pass_dedup(spark):
     assert got[0].block_pass == "host"  # lexicographically first provenance
 
 
+def test_key_join_pairs_contract(spark):
+    """One row per shared key, id_a < id_b whatever the input order, carry
+    columns suffixed _a/_b, singleton keys silent; a list key joins on
+    every column of it."""
+    rows = [("k1", 3, "c"), ("k1", 2, "b"), ("k1", 1, "a"),
+            ("k2", 2, "b"), ("k2", 1, "a"), ("k3", 9, "z")]
+    keyed = spark.createDataFrame(rows, "k string, id long, x string")
+    pairs = candidates.key_join_pairs(keyed, "k", "id", carry=("x",))
+    assert sorted(pairs.columns) == ["id_a", "id_b", "k", "x_a", "x_b"]
+    got = sorted((r.k, r.id_a, r.id_b, r.x_a, r.x_b) for r in pairs.collect())
+    assert got == [
+        ("k1", 1, 2, "a", "b"), ("k1", 1, 3, "a", "c"), ("k1", 2, 3, "b", "c"),
+        ("k2", 1, 2, "a", "b"),  # (1, 2) shares two keys: two rows
+    ]
+    two = keyed.withColumn("k2", F.lit(0))
+    multi = candidates.key_join_pairs(two, ["k", "k2"], "id")
+    assert sorted(multi.columns) == ["id_a", "id_b", "k", "k2"]
+    assert multi.count() == 4
+
+
+def test_compute_partitions_default_and_override(spark, monkeypatch):
+    from levsim.session import compute_partitions
+
+    monkeypatch.delenv("LEVSIM_COMPUTE_PARTITIONS", raising=False)
+    cores = spark.sparkContext.defaultParallelism
+    assert compute_partitions(spark, 1) == cores
+    assert compute_partitions(spark, 2) == 2 * cores
+    monkeypatch.setenv("LEVSIM_COMPUTE_PARTITIONS", "7")
+    assert compute_partitions(spark, 1) == compute_partitions(spark, 2) == 7
+
+
 def test_prefilter_bound_is_exact():
     # no pair that can reach tau is ever pruned (the bound is an upper bound)
     rng = random.Random(5)

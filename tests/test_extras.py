@@ -91,7 +91,7 @@ def test_simhash_recall_contract(spark):
         rows.append((i, " ".join(toks)))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = {i: dedup.simhash64(t.split()) for i, t in rows}
-    for k in (3, 8):
+    for k in (0, 3, 8):  # 0: one 64-bit band (the all-ones mask edge)
         want = {
             (a, b)
             for a in range(40) for b in range(a + 1, 40)

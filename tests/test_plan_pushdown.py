@@ -223,3 +223,27 @@ def test_fuzz_prefilters_are_pre_udf_predicates(spark, pages_path):
         v2 = 1.0 if r.ls + r.lcb == 0 else 2.0 * r.ls / (r.ls + r.lcb)
         v3 = 1.0 if r.lca + r.lcb == 0 else 2.0 * min(r.lca, r.lcb) / (r.lca + r.lcb)
         assert r.keep == (max(v1, v2, v3) >= 0.9), (r.ls, r.lca, r.lcb)
+
+
+def test_key_join_pairs_shares_one_materialization(spark):
+    """Both self-join sides scan ONE LogicalRDD (the keyed table is
+    materialized once), and a carried column nobody reads is pruned from
+    the join side: id_b's side keeps only (key, id)."""
+    from levsim.candidates import key_join_pairs
+
+    keyed = spark.createDataFrame(
+        [("k", 1, "a", "p"), ("k", 2, "b", "q")],
+        "k string, id long, x string, y string")
+    pairs = key_join_pairs(keyed, "k", "id", carry=("x", "y")).select(
+        "id_a", "id_b", "x_a")
+    plan = pairs._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    assert [n.nodeName() for n in leaves] == ["LogicalRDD", "LogicalRDD"]
+    assert len({n.rdd().id() for n in leaves}) == 1
+    projects = [ln for ln in plan.toString().splitlines() if "Project [" in ln]
+    side_a = [ln for ln in projects if "AS id_a" in ln]
+    side_b = [ln for ln in projects if "AS id_b" in ln]
+    assert len(side_a) == 1 and len(side_b) == 1, projects
+    assert "AS x_a" in side_a[0] and "AS y_a" not in side_a[0]
+    assert "AS x_b" not in side_b[0] and "AS y_b" not in side_b[0]
